@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import Json.{quote => q}
+
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, printing ONE JSON line with per-query seconds.
   *
@@ -62,14 +64,6 @@ object Bench {
         slice
       case None => filtered
     }
-
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
 
     // SPARK_GRAFT_PASSES=1 turns bench into a single-pass soak runner
     // (no warm-up, no extra samples): constrained-memory and linearity

@@ -3,7 +3,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 
 import graft.queries.{Analytics, CsvFunnelReport, Curation, FunnelOverEvents, Inference, Insights, LlmQueries, Relational, Scoring, Signals}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7 + the builder prompt.
   *
   * Every implemented operator family registers here: a Spark query over
   * the harness's parquet tables plus a value-identical DuckDB oracle —

@@ -399,7 +399,8 @@ object Similarity {
     * At 100 TB this is the layout that makes ANN cheap — a probe is a
     * PARTITION-PRUNED scan of nprobe directories, not a full pass.
     */
-  def ivfWriteIndex(emb: DataFrame, dir: String, nlist: Int = 16): Unit = {
+  def ivfWriteIndex(emb: DataFrame, indexDir: String,
+      nlist: Int = 16): Unit = {
     import org.apache.spark.ml.clustering.KMeans
     val vecs = emb.select(col("vec_id"), col("embedding"),
       array_to_vector(col("embedding")).as("features"))
@@ -407,13 +408,14 @@ object Similarity {
       .setFeaturesCol("features").setPredictionCol("cell")
     val model = km.fit(vecs)
     model.transform(vecs).select("vec_id", "embedding", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$indexDir/vectors")
     val spark = emb.sparkSession
     import spark.implicits._
     model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray) }.toSeq
       .toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+      .write.mode("overwrite").parquet(s"$indexDir/centroids")
   }
 
   /** Probe a persisted IVF index: rank cells by centroid distance to
@@ -422,17 +424,17 @@ object Similarity {
     * the partition column ⇒ PruneFileSourcePartitions, asserted in
     * LlmSpec) and rank candidates by exact cosine.
     */
-  def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queryVec: Array[Double], k: Int = 10, nprobe: Int = 4,
+  def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, queryVec: Array[Double], k: Int = 10, nprobe: Int = 4,
       excludeId: Long = -1L): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = spark.read.parquet(s"$indexDir/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
     val probed = centroids.map { case (cell, c) =>
       val d2 = c.zip(queryVec).map { case (x, q) => val t = x - q; t * t }.sum
       (cell, d2)
     }.sortBy { case (cell, d2) => (d2, cell) }.take(nprobe).map(_._1)
     val q = array(queryVec.toIndexedSeq.map(lit(_)): _*)
-    spark.read.parquet(s"$dir/vectors")
+    spark.read.parquet(s"$indexDir/vectors")
       .filter(col("cell").isin(probed.toIndexedSeq: _*) && col("vec_id") =!= excludeId)
       .select(col("vec_id"),
         bround(cosine(dbl(col("embedding")), q), 6).as("sim"))

@@ -363,7 +363,7 @@ object TextAnalysis {
     * so the stored list is deterministic despite collect_list's
     * shuffle-order nondeterminism.
     */
-  def invertedIndexWrite(docs: DataFrame, dir: String,
+  def invertedIndexWrite(docs: DataFrame, indexDir: String,
       nBuckets: Int = 16): Unit =
     docs
       .select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
@@ -373,7 +373,7 @@ object TextAnalysis {
         sort_array(collect_list(col("doc_id"))).as("postings"))
       .withColumn("bucket", termBucket(col("term"), nBuckets))
       .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dir/postings")
+      .parquet(s"$indexDir/postings")
 
   /** The engine-portable term→partition mapping — [[Dedup.hashBucket]]
     * (the ONE bucket recipe) at modulus nBuckets.
@@ -397,9 +397,10 @@ object TextAnalysis {
     * canonical form, the collections_agg precedent).
     */
   def invertedIndexProbe(spark: org.apache.spark.sql.SparkSession,
-      dir: String, terms: Seq[String], nBuckets: Int = 16): DataFrame = {
+      indexDir: String, terms: Seq[String],
+      nBuckets: Int = 16): DataFrame = {
     val buckets = terms.map(termBucketLocal(_, nBuckets)).distinct
-    spark.read.parquet(s"$dir/postings")
+    spark.read.parquet(s"$indexDir/postings")
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
       .select(col("term"), col("df"), col("bucket").cast("long").as("bucket"),
         concat_ws(",", transform(col("postings"), _.cast("string")))

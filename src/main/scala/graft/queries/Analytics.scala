@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Tables.{events, load => t, scratch, sfTag}
 import graft.llm.{Dedup, TextAnalysis}
 
 /** Round-7 analytics batch: behavioral/time-series operators (cohorts,
@@ -19,11 +20,6 @@ import graft.llm.{Dedup, TextAnalysis}
   * ORDER BY everywhere, integer arithmetic wherever exactness matters.
   */
 object Analytics {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
 
   private def money(c: String) = col(c).cast(DecimalType(18, 2))
 
@@ -70,8 +66,6 @@ object Analytics {
   private def bucket1000(salt: String, idCol: Column): Column =
     Dedup.hashBucket1000(idCol, salt)
 
-  private def sfTag(dir: String): String = Relational.sfTag(dir)
-
   /** Strict-order funnel fold (see the `funnel_ordered` registration).
     *
     * The per-user `collect_list` is BOUNDED at 100 TB by construction
@@ -106,7 +100,7 @@ object Analytics {
         (st === 3 && ty === "purchase" && ts > t && ts - t <= winUs)
       when(adv, struct((st + 1).as("stage"), ts.as("t"))).otherwise(acc)
     }, _.getField("stage"))
-    val ev = Relational.events(s, dir)
+    val ev = events(s, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
     val byTime = Window.partitionBy("user_id")
@@ -136,7 +130,7 @@ object Analytics {
     // broadcast back onto the event stream; the fact table shuffles once
     // for the final (cohort, age) rollup.
     "cohort_retention" -> ((s, dir) => {
-      val ev = Relational.events(s, dir).select(col("user_id"),
+      val ev = events(s, dir).select(col("user_id"),
         expr("datediff(to_date(ts), date'2024-01-01') div 7").as("wk"))
       val firstWk = ev.groupBy("user_id").agg(min("wk").as("cohort_wk"))
       ev.join(broadcast(firstWk), "user_id")
@@ -152,7 +146,7 @@ object Analytics {
     // histogram. The engagement-duration metric cohort_retention's
     // weekly grid can't see.
     "activity_streaks" -> ((s, dir) => {
-      val ud = Relational.events(s, dir)
+      val ud = events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
       val w = Window.partitionBy("user_id").orderBy("day")
       val streaks = ud
@@ -198,7 +192,7 @@ object Analytics {
     // run at grid scale. Ranks are exact either way, so the oracle
     // keeps the window spelling — the closed forms ARE the gate.
     "window_distribution" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
         .filter(col("value").isNotNull)
         .select(col("event_type"), col("value"))
       // bucket width 1.0: events.value is 2-decimal in [0, ~560], so a
@@ -269,7 +263,7 @@ object Analytics {
     // sessionize), and the emitted window end is last_ts + gap, not
     // last_ts. The rollup output is session-grid-sized.
     "session_window_agg" -> ((s, dir) => {
-      val sw = Relational.events(s, dir)
+      val sw = events(s, dir)
         .groupBy(col("user_id"),
           session_window(col("ts"), "30 minutes").as("sw"))
         .agg(count(lit(1)).as("n_events"))
@@ -297,7 +291,7 @@ object Analytics {
     // event_transitions counts ADJACENT steps; this counts
     // subsequence EXISTENCE — the episode-mining complement.
     "seq_patterns" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"))
         .localCheckpoint() // extrema agg + the middle-element probe
@@ -333,7 +327,7 @@ object Analytics {
 
     "event_transitions" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      Relational.events(s, dir)
+      events(s, dir)
         .withColumn("next_type", lead("event_type", 1).over(w))
         .filter(col("next_type").isNotNull)
         .groupBy("event_type", "next_type")
@@ -451,7 +445,7 @@ object Analytics {
       def ok(i: Int) =
         abs(element_at(col("ap"), i) - element_at(col("ex"), i)) <=
           abs(element_at(col("ex"), i)) * 0.05 + 0.05
-      Relational.events(s, dir).groupBy("event_type").agg(
+      events(s, dir).groupBy("event_type").agg(
         expr(s"percentile(value, $ps)").as("ex"),
         expr(s"approx_percentile(value, $ps, 10000)").as("ap"))
         .filter(ok(1) && ok(2) && ok(3))
@@ -603,7 +597,7 @@ object Analytics {
     // (user_id) partitioning.
     "time_weighted_avg" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      Relational.events(s, dir)
+      events(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"),
           money("value").as("v"))
         .withColumn("dt_us",
@@ -628,7 +622,7 @@ object Analytics {
     // any day-aligned time-series model. Integer day indices and counts
     // end to end.
     "gap_fill" -> ((s, dir) => {
-      val daily = Relational.events(s, dir)
+      val daily = events(s, dir)
         .withColumn("d", expr("datediff(to_date(ts), date'2024-01-01')"))
         .groupBy("user_id", "d").agg(count(lit(1)).as("cnt"))
       val spine = daily.groupBy("user_id")
@@ -651,7 +645,7 @@ object Analytics {
     "dedup_horizon" -> ((s, dir) => {
       val w = Window.partitionBy("user_id", "event_type", "bucket")
         .orderBy(col("ts"), col("event_id"))
-      Relational.events(s, dir)
+      events(s, dir)
         .withColumn("bucket", expr("unix_micros(ts) div 21600000000"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
@@ -689,8 +683,7 @@ object Analytics {
     // floor(x/norm·127 + ½) — floor, not round, so no tie-break
     // ambiguity across engines. Map-only, no shuffle.
     "embed_quantize" -> ((s, dir) => {
-      GraftSession.tune(s)
-      s.read.parquet(s"$dir/embeddings.parquet")
+      t(s, dir, "embeddings")
         .withColumn("norm", sqrt(aggregate(col("embedding"), lit(0.0),
           (a, x) => a + x.cast("double") * x.cast("double"))))
         .filter(col("norm") > 0)
@@ -797,7 +790,7 @@ object Analytics {
     // memory, counts stay exact BIGINTs. Readout: top-10 users + the
     // corpus total.
     "subseq_count" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
         .filter(col("event_type").isin("view", "click", "purchase"))
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), col("event_type"))
@@ -828,8 +821,8 @@ object Analytics {
     // the correctness contract of every incremental pipeline. Disjoint
     // partition appends never rewrite old data.
     "incremental_agg" -> ((s, dir) => {
-      val path = s"/root/repo/target/incremental/daily_${sfTag(dir)}"
-      val ev = Relational.events(s, dir)
+      val path = scratch(s"incremental/daily_${sfTag(dir)}")
+      val ev = events(s, dir)
         .withColumn("d", expr("datediff(to_date(ts), date'2024-01-01')"))
       def daily(f: Column) = ev.filter(f).groupBy("d", "event_type")
         .agg(count(lit(1)).as("cnt"),
@@ -852,8 +845,8 @@ object Analytics {
     // static overwrite the early days would vanish; if the repair
     // missed, the zeros would surface — either way the gate trips.
     "dynamic_overwrite" -> ((s, dir) => {
-      val path = s"/root/repo/target/incremental/dyn_${sfTag(dir)}"
-      val daily = Relational.events(s, dir)
+      val path = scratch(s"incremental/dyn_${sfTag(dir)}")
+      val daily = events(s, dir)
         .withColumn("d", expr("datediff(to_date(ts), date'2024-01-01')"))
         .groupBy("d", "event_type").agg(count(lit(1)).as("cnt"))
       daily.withColumn("cnt",
@@ -873,7 +866,7 @@ object Analytics {
     // absent columns — the contract that lets a 100 TB table add
     // columns without rewriting history
     "schema_merge" -> ((s, dir) => {
-      val path = s"/root/repo/target/roundtrip/evolve_${sfTag(dir)}"
+      val path = scratch(s"roundtrip/evolve_${sfTag(dir)}")
       val d = t(s, dir, "documents")
       org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
@@ -962,7 +955,7 @@ object Analytics {
     // SQL-on-anything engine must pin down, spelled identically in both
     // engines
     "null_semantics" -> ((s, dir) =>
-      Relational.events(s, dir)
+      events(s, dir)
         .select(col("event_id"),
           nullif(col("event_type"), lit("error")).as("t"))
         .groupBy("t")
@@ -976,7 +969,7 @@ object Analytics {
     // gaps-and-islands (lag + running flag-sum) — an independent
     // spelling of the merge semantics.
     "session_window_native" -> ((s, dir) =>
-      Relational.events(s, dir)
+      events(s, dir)
         .groupBy(session_window(col("ts"), "6 hours").as("sw"),
           col("user_id"))
         .agg(count(lit(1)).as("n_events"))
@@ -995,7 +988,7 @@ object Analytics {
       // row duplicated for the distinct branch) with the 2^14-register
       // HLL updated on the expanded stream — measured 2.3 s vs 0.9 s
       // for the two-aggregate spelling at sf0.1
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
       val exact = ev.groupBy("event_type")
         .agg(countDistinct("user_id").as("exact_users"))
       val approx = ev.groupBy("event_type")
@@ -1025,7 +1018,7 @@ object Analytics {
     "conditional_window" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-4, 0)
-      Relational.events(s, dir)
+      events(s, dir)
         .select(col("event_id"), col("user_id"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .over(w).as("purchases_last5"))
@@ -1037,7 +1030,7 @@ object Analytics {
     // integer arithmetic — the growth-analytics staple, with no
     // cumulative-DISTINCT shuffle anywhere.
     "new_vs_returning" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
         .select(col("user_id"),
           expr("datediff(to_date(ts), date'2024-01-01')").as("d"))
       val firstSeen = ev.groupBy("user_id").agg(min("d").as("d0"))
@@ -1147,7 +1140,7 @@ object Analytics {
     // lands in exactly two windows; the oracle derives the same pair of
     // window starts arithmetically
     "sliding_window_agg" -> ((s, dir) =>
-      Relational.events(s, dir)
+      events(s, dir)
         .groupBy(window(col("ts"), "2 days", "1 day").as("w"),
           col("event_type"))
         .agg(count(lit(1)).as("cnt"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftSession
 import graft.core.{DateSpec, Schemas}
 import graft.engine.FunnelTable
-import graft.io.{FunnelCsvFixture, FunnelSources}
+import graft.io.{FunnelCsvFixture, FunnelSources, Tables}
 
 /** The CSV source layer exercised END TO END against a DuckDB oracle:
   * path-templated day scans, the month-glob + `dd-MM-yyyy` range
@@ -16,7 +16,7 @@ import graft.io.{FunnelCsvFixture, FunnelSources}
   */
 object CsvFunnelReport {
 
-  val fixtureBase = "/root/repo/target/funnel-csv-fixture"
+  val fixtureBase = Tables.scratch("funnel-csv-fixture")
   val entity = "fiu-a"
   val dateSpecText = "31_01_2026 -> 01_02_2026"
 
@@ -43,8 +43,8 @@ object CsvFunnelReport {
     * partition pruning load-bearing: an unpruned scan would read
     * 30_01's rows and overcount every stage sum, failing the oracle.
     */
-  val partitionedCsvBase = "/root/repo/target/funnel-csv-fixture-3day"
-  val partitionedDir = "/root/repo/target/funnel-partitioned-stages"
+  val partitionedCsvBase = Tables.scratch("funnel-csv-fixture-3day")
+  val partitionedDir = Tables.scratch("funnel-partitioned-stages")
   private val decoyDay = java.time.LocalDate.of(2026, 1, 30)
 
   private def ensurePartitioned(s: SparkSession): String = synchronized {

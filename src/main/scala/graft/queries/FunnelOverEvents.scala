@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.core.Schemas
 import graft.engine.FunnelTable
+import graft.io.Tables.{events, sfTag, streamEvents}
 
 /** The full funnel pipeline (SURVEY §2.9, `report_engine.py:233-319`)
   * exercised over the harness's `events` table, so the driver's DuckDB
@@ -65,8 +66,7 @@ object FunnelOverEvents {
   }
 
   def query(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    val ev = Relational.events(s, dir)
+    val ev = events(s, dir)
     val aggs = funnelAggs
     val one = ev.agg(aggs.head, aggs.tail: _*)
     FunnelTable.rows(FunnelTable.wideFromJoined(one)).orderBy("row_idx")
@@ -79,9 +79,10 @@ object FunnelOverEvents {
     * sink, then the identical wide→rows projection over the settled
     * 1-row result read back from parquet. Same oracle as the batch
     * path: stream/batch parity for the funnel table itself is a
-    * hash-checked gate, not a spec claim. The ts/schema normalization
-    * branches exactly like [[Insights]]' stream_daily_counts (the
-    * round-9 lesson).
+    * hash-checked gate, not a spec claim. The source is
+    * [[graft.io.Tables.streamEvents]], the same reader every stream
+    * query uses; the aggregate reads only `event_id`/`event_type`, so
+    * its `ts` normalization is pruned from the plan.
     *
     * Sink choice: Spark's native parquet sink is append-only, which a
     * complete-mode global aggregate cannot use, so the canonical file
@@ -94,7 +95,7 @@ object FunnelOverEvents {
     */
   def streamQuery(s: SparkSession, dir: String): DataFrame = {
     val sink = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_funnel_" + Relational.sfTag(dir) + "_" +
+      "graft_stream_funnel_" + sfTag(dir) + "_" +
         java.util.UUID.randomUUID.toString.replace("-", "").take(12))
       .getAbsolutePath
     runStreamFunnel(s, dir, sink)
@@ -118,15 +119,7 @@ object FunnelOverEvents {
       maxFilesPerTrigger: Option[Int] = None,
       failAtBatch: Option[Long] = None): Unit = {
     import org.apache.spark.sql.streaming.Trigger
-    GraftSession.tune(s)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val tablePath = new java.io.File(s"$dir/events.parquet")
-    val rd = s.readStream.schema(schema)
-    val limited = maxFilesPerTrigger
-      .map(n => rd.option("maxFilesPerTrigger", n.toString)).getOrElse(rd)
-    val raw =
-      if (tablePath.isDirectory) limited.parquet(tablePath.toString)
-      else limited.option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = streamEvents(s, dir, maxFilesPerTrigger)
     val aggs = funnelAggs
     val writer = raw.agg(aggs.head, aggs.tail: _*)
       .writeStream
@@ -145,7 +138,7 @@ object FunnelOverEvents {
           .getOrElse(writer).start()
         q.awaitTermination()
         graft.ops.PlanShape.streamShapes.record(
-          "funnel_" + Relational.sfTag(dir), q)
+          "funnel_" + sfTag(dir), q)
       }
     }
   }

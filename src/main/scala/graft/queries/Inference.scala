@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GraftSession
+import graft.io.Tables.{events, load => t}
 import graft.llm.Dedup
 
 /** Round-11 batch: time-series diagnostics and nonparametric inference
@@ -18,11 +18,6 @@ import graft.llm.Dedup
   * and the final IEEE chain is mirrored verbatim in the oracle.
   */
 object Inference {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
 
   private val D38 = DecimalType(38, 0)
 
@@ -44,7 +39,7 @@ object Inference {
     * the materialized series is tiny at any corpus size.
     */
   private def dailySeries(s: SparkSession, dir: String): DataFrame =
-    Relational.events(s, dir)
+    events(s, dir)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("x"))
       .localCheckpoint()
@@ -255,7 +250,7 @@ object Inference {
     // one final mirrored IEEE chain for the pooled z. One user-keyed
     // aggregate then scalars.
     "prop_ztest" -> ((s, dir) => {
-      val u = Relational.events(s, dir).groupBy("user_id")
+      val u = events(s, dir).groupBy("user_id")
         .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("conv"))
         .withColumn("grp", pmod(col("user_id"), lit(2)))
@@ -275,7 +270,7 @@ object Inference {
     }),
 
     "mannwhitney_u" -> ((s, dir) => {
-      val g = Relational.events(s, dir)
+      val g = events(s, dir)
         .filter(col("event_type").isin("purchase", "view") &&
           col("value").isNotNull)
       val grid = g.groupBy("value").agg(
@@ -329,7 +324,7 @@ object Inference {
     // and the sigmoid readout at the mean. One aggregation pass,
     // map-side combinable; the only reduce is a 1-row moment tuple.
     "logistic_irls_step" -> ((s, dir) => {
-      val ev = Relational.events(s, dir).select(
+      val ev = events(s, dir).select(
         when(col("event_type") === "purchase", 1L).otherwise(-1L).as("t"),
         bround(col("value") * lit(1000000.0)).cast("long").as("x"))
       val m = ev.agg(count(lit(1)).as("n"),
@@ -408,7 +403,7 @@ object Inference {
     // come from index parity, not row order).
     "haar_decompose" -> ((s, dir) => {
       val grid = s.range(16).select(col("id").cast("int").as("d"))
-      val daily = Relational.events(s, dir)
+      val daily = events(s, dir)
         .select(expr("datediff(to_date(ts), date'2024-01-01')").as("d"))
         .filter(col("d") >= 0 && col("d") <= 15)
         .groupBy("d").agg(count(lit(1)).as("x"))
@@ -606,7 +601,7 @@ object Inference {
     // the identical IEEE mean chain.
     "permutation_test" -> ((s, dir) => {
       val J = 63
-      val users = Relational.events(s, dir)
+      val users = events(s, dir)
         .select(col("user_id"),
           bround(col("value") * lit(1000000.0)).cast("long").as("v"))
         .groupBy("user_id")
@@ -661,7 +656,7 @@ object Inference {
     // The lag runs over the bounded per-type DAY grid, never raw rows.
     "durbin_watson" -> ((s, dir) => {
       val d38 = "decimal(38,0)"
-      val daily = Relational.events(s, dir)
+      val daily = events(s, dir)
         .groupBy(col("event_type"),
           datediff(col("ts").cast("date"), lit("2024-01-01").cast("date"))
             .as("d"))
@@ -827,7 +822,7 @@ object Inference {
     // computes corpus-wide. Two keyed aggregates, both on user_id —
     // one shuffle.
     "user_diversity" -> ((s, dir) => {
-      val per = Relational.events(s, dir)
+      val per = events(s, dir)
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
         .groupBy("user_id")
         .agg(sum("c").as("n"), sum(col("c") * col("c")).as("c2"))
@@ -851,7 +846,7 @@ object Inference {
     "burstiness" -> ((s, dir) => {
       // no event_id tiebreak needed: the gap MULTISET of a sorted
       // timestamp list is invariant under permutations of equal values
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("us"))
       val w = Window.partitionBy("user_id").orderBy(col("us"))
       val gaps = ev
@@ -914,7 +909,7 @@ object Inference {
     // that justifies running CUPED at all. Split day = min_day + 15,
     // derived in-plan, no wall clock.
     "cuped_adjust" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("day"),
           bround(col("value") * lit(1000000.0)).cast("long").as("vm"))
       val split = ev.agg(date_add(min(col("day")), 15).as("cut"))
@@ -1017,7 +1012,7 @@ object Inference {
     // in one mirrored double chain. Cost: |days|·15 exploded probe rows
     // joined back to the bounded grid — quadratic in nothing.
     "cross_corr" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
       def daily(et: String, cn: String) = ev
         .filter(col("event_type") === et)
         .groupBy(to_date(col("ts")).as("day"))
@@ -1153,7 +1148,7 @@ object Inference {
     // ((C−D)/√((n0−n1)(n0−n2)), √ is correctly-rounded IEEE on both
     // engines, so identical integer inputs give identical bits).
     "kendall_tau" -> ((s, dir) => {
-      val dd = Relational.events(s, dir)
+      val dd = events(s, dir)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("x"),
           count_distinct(col("user_id")).as("y"))

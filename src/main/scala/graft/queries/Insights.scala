@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Tables.{events, load => t, sfTag, streamEvents}
 import graft.llm.{Dedup, TextAnalysis}
 
 /** Round-10 analytics batch: funnel timing, exact correlation, iterative
@@ -17,40 +18,7 @@ import graft.llm.{Dedup, TextAnalysis}
   */
 object Insights {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
-
   private val D38 = DecimalType(38, 0)
-
-  /** The events table as an unbounded source: same file, same
-    * timestamp-precision normalization as the batch reader
-    * ([[Relational.events]] — BIGINT nanos, TIMESTAMP_NTZ, and TIMESTAMP
-    * all land on µs TIMESTAMP), but planned as a streaming scan so every
-    * query built on it runs through the micro-batch engine. Handles both
-    * fixture layouts (single file and directory table).
-    */
-  private def streamEvents(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType,
-      TimestampType}
-    GraftSession.tune(s)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val tablePath = new java.io.File(s"$dir/events.parquet")
-    val raw =
-      if (tablePath.isDirectory)
-        s.readStream.schema(schema).parquet(tablePath.toString)
-      else
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-    schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
 
   /** Content-addressed, atomically-published replay fixture for the
     * staggered-modtime streaming replays (stream_sessionize /
@@ -310,7 +278,7 @@ object Insights {
       .select(date_format(col("day.start"), "yyyy-MM-dd").as("p_day"),
         col("n_pairs"), col("n_users"))
     parquetSinkReadback(s, grid, "append",
-      "ssj_" + Relational.sfTag(dir))
+      "ssj_" + sfTag(dir))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -329,7 +297,7 @@ object Insights {
     "funnel_conversion_time" -> ((s, dir) => {
       def firstTs(et: String) =
         min(when(col("event_type") === et, unix_micros(col("ts"))))
-      val f = Relational.events(s, dir)
+      val f = events(s, dir)
         .filter(col("event_type").isin("signup", "view", "click", "purchase"))
         .groupBy("user_id")
         .agg(firstTs("signup").as("t_signup"), firstTs("view").as("t_view"),
@@ -525,7 +493,7 @@ object Insights {
     // approx-quantile gate (quantile_gate), and the top-share/max here
     // stay exact either way.
     "skew_stats" -> ((s, dir) => {
-      val c = Relational.events(s, dir)
+      val c = events(s, dir)
         .groupBy("user_id").agg(count(lit(1)).as("c"))
       val w = Window.partitionBy(lit(1))
       val r = c.select(col("c"),
@@ -651,7 +619,7 @@ object Insights {
     // DECIMAL(38,0) ≙ HUGEINT.
     "attribution_ushape" -> ((s, dir) => {
       val lookbackUs = 259200000000L // 3 days in µs
-      val ev = Relational.events(s, dir).select(col("user_id"),
+      val ev = events(s, dir).select(col("user_id"),
         col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"),
         bround(col("value") * lit(1000000.0)).cast("long").as("v"))
@@ -706,7 +674,7 @@ object Insights {
     "attribution_decay" -> ((s, dir) => {
       val lookbackUs = 259200000000L // 3 days in µs
       val dayUs = 86400000000L
-      val ev = Relational.events(s, dir).select(col("user_id"),
+      val ev = events(s, dir).select(col("user_id"),
         col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"),
         bround(col("value") * lit(1000000.0)).cast("long").as("v"))
@@ -756,38 +724,14 @@ object Insights {
     // readStream over the events parquet, AvailableNow trigger,
     // complete-mode memory sink — and its final result must equal the
     // batch oracle's GROUP BY day. Stream/batch parity stops being a
-    // claim in a spec and becomes a hash-checked gate. The ts
-    // normalization branches on the observed schema exactly like
-    // [[Relational.events]] (the round-9 lesson applies to stream
-    // sources too).
+    // claim in a spec and becomes a hash-checked gate. The source is
+    // [[graft.io.Tables.streamEvents]], whose ts normalization is the
+    // batch reader's (the round-9 lesson applies to stream sources too).
     "stream_daily_counts" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType,
-        TimestampType}
-      GraftSession.tune(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      // the harness table is a single FILE (stream the parent dir with
-      // a glob filter — the file source rejects a file basePath), but
-      // Spark-written fixtures are DIRECTORIES named events.parquet
-      // (stream them directly; a name glob would exclude their part
-      // files)
-      val tablePath = new java.io.File(s"$dir/events.parquet")
-      val raw =
-        if (tablePath.isDirectory)
-          s.readStream.schema(schema).parquet(tablePath.toString)
-        else
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val ev = schema("ts").dataType match {
-        case LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case _: TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => raw
-      }
+      val ev = streamEvents(s, dir)
       parquetSinkReadback(s,
           graft.streaming.FunnelStream.dailyEventCounts(ev),
-          "complete", "daily_" + Relational.sfTag(dir))
+          "complete", "daily_" + sfTag(dir))
         .select(date_format(col("day_start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("cnt"))
         .orderBy("day", "event_type")
@@ -809,7 +753,7 @@ object Insights {
       // attribute-dedup workaround (the old memory-sink MemoryPlan did)
       val grid = parquetSinkReadback(s,
         ev.groupBy("event_type", "bin").agg(count(lit(1)).as("c")),
-        "complete", "quant_" + Relational.sfTag(dir))
+        "complete", "quant_" + sfTag(dir))
       Signals.gridQuantileReadout(s, grid)
     }),
 
@@ -829,8 +773,8 @@ object Insights {
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
       val regs = parquetSinkReadback(s,
         ev.groupBy("event_type").agg(hll(col("uid")).as("regs")),
-        "complete", "hll_" + Relational.sfTag(dir))
-      val exact = Relational.events(s, dir).groupBy("event_type")
+        "complete", "hll_" + sfTag(dir))
+      val exact = events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
       regs.join(exact, Seq("event_type"))
         .select(col("event_type"),
@@ -862,8 +806,8 @@ object Insights {
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
       val sk = parquetSinkReadback(s,
         ev.groupBy("event_type").agg(kmv(col("uid")).as("sk")),
-        "complete", "kmv_" + Relational.sfTag(dir))
-      val exact = Relational.events(s, dir).groupBy("event_type")
+        "complete", "kmv_" + sfTag(dir))
+      val exact = events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
       sk.join(exact, Seq("event_type"))
         .select(col("event_type"),
@@ -893,11 +837,11 @@ object Insights {
           .as("m"))
       val counts = parquetSinkReadback(s,
           ev.groupBy("event_type", "w").agg(bit_or(col("m")).as("bm")),
-          "complete", "bitmap_" + Relational.sfTag(dir))
+          "complete", "bitmap_" + sfTag(dir))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_words"),
           sum(bit_count(col("bm"))).cast("long").as("distinct_bitmap"))
-      val exact = Relational.events(s, dir).groupBy("event_type")
+      val exact = events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("distinct_exact"))
       counts.join(exact, Seq("event_type"))
         .orderBy("event_type")
@@ -923,8 +867,8 @@ object Insights {
         .select(col("user_id").cast("string").as("uid"))
       val bits = parquetSinkReadback(s,
         ev.groupBy().agg(bloomAgg(col("uid")).as("bits")),
-        "complete", "bloom_" + Relational.sfTag(dir))
-      val present = Relational.events(s, dir)
+        "complete", "bloom_" + sfTag(dir))
+      val present = events(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id")).distinct()
         .withColumn("present", lit(1))
@@ -963,7 +907,7 @@ object Insights {
       val ev = streamEvents(s, dir).select(col("event_type"))
       val sketch = parquetSinkReadback(s,
         ev.groupBy().agg(cmsU(col("event_type")).as("sketch")),
-        "complete", "cms_" + Relational.sfTag(dir))
+        "complete", "cms_" + sfTag(dir))
       val (h1, h2) =
         graft.functions.CountMinSketchAgg.hashPairCols(col("event_type"))
       val est = (0 until depth).map { i =>
@@ -971,7 +915,7 @@ object Insights {
           (lit(i * width) + pmod(h1 + lit(i.toLong) * h2,
             lit(width.toLong)) + 1).cast("int"))
       }.reduce(least(_, _))
-      Relational.events(s, dir).groupBy("event_type")
+      events(s, dir).groupBy("event_type")
         .agg(count(lit(1)).as("true_cnt"))
         .crossJoin(broadcast(sketch))
         .select(col("event_type"), est.as("est_cnt"), col("true_cnt"))
@@ -992,8 +936,8 @@ object Insights {
       val ev = streamEvents(s, dir).select(col("event_type"))
       val summary = parquetSinkReadback(s,
         ev.groupBy().agg(mgU(col("event_type")).as("summary")),
-        "complete", "topk_" + Relational.sfTag(dir))
-      Relational.events(s, dir).groupBy("event_type")
+        "complete", "topk_" + sfTag(dir))
+      events(s, dir).groupBy("event_type")
         .agg(count(lit(1)).as("true_cnt"))
         .crossJoin(broadcast(summary))
         .select(col("event_type"),
@@ -1020,7 +964,7 @@ object Insights {
             .dropDuplicates("user_id", "event_type")
             .groupBy("event_type")
             .agg(count(lit(1)).as("distinct_users")),
-          "complete", "dedup_" + Relational.sfTag(dir))
+          "complete", "dedup_" + sfTag(dir))
         .orderBy("event_type")
     }),
 
@@ -1035,14 +979,14 @@ object Insights {
     "stream_enriched_counts" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val ev = streamEvents(s, dir)
-      val dim = Relational.events(s, dir)
+      val dim = events(s, dir)
         .select(col("user_id")).distinct()
         .withColumn("segment",
           concat(lit("seg"), pmod(col("user_id"), lit(4))))
       parquetSinkReadback(s,
           graft.streaming.FunnelStream
             .enrichedDailyCounts(ev.select("ts", "user_id"), dim),
-          "complete", "enrich_" + Relational.sfTag(dir))
+          "complete", "enrich_" + sfTag(dir))
         .select(date_format(col("day_start"), "yyyy-MM-dd").as("day"),
           col("segment"), col("cnt"))
         .orderBy("day", "segment")
@@ -1076,13 +1020,13 @@ object Insights {
     "dpp_join" -> ((s, dir) => {
       GraftSession.tune(s)
       val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_dpp_" + Relational.sfTag(dir)).getAbsolutePath
+        "graft_dpp_" + sfTag(dir)).getAbsolutePath
       if (!new java.io.File(p, "_SUCCESS").exists)
-        Relational.events(s, dir)
+        events(s, dir)
           .select(to_date(col("ts")).as("day"), col("value"))
           .write.mode("overwrite").partitionBy("day").parquet(p)
       val fact = s.read.parquet(p)
-      val dim = Relational.events(s, dir)
+      val dim = events(s, dir)
         .select(to_date(col("ts")).as("day")).distinct()
         .filter(pmod(datediff(col("day"), to_date(lit("2024-01-01"))),
           lit(7)) < 2)
@@ -1113,8 +1057,7 @@ object Insights {
     "stream_sessionize" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      GraftSession.tune(s)
-      val ev = Relational.events(s, dir).select(col("user_id"), col("ts"))
+      val ev = events(s, dir).select(col("user_id"), col("ts"))
       // one pass for the sentinel horizon AND the content fingerprint
       // that keys the fixture (count / max-ts / user-sum: a regenerated
       // events table at the same SF gets a fresh replay)
@@ -1125,7 +1068,7 @@ object Insights {
         java.lang.Long.toHexString(maxUs) + "_" +
         java.lang.Long.toHexString(meta.getLong(2))
       val scratch = replayFixture(
-          "graft_stream_sess_" + Relational.sfTag(dir), fp) { tmp =>
+          "graft_stream_sess_" + sfTag(dir), fp) { tmp =>
         val tp = tmp.getAbsolutePath
         def dataFiles: Set[java.io.File] =
           Option(tmp.listFiles).map(_.toSet).getOrElse(Set.empty)
@@ -1153,7 +1096,7 @@ object Insights {
         .as[graft.streaming.FunnelStream.UserEvent]
       val sessions = parquetSinkReadback(s,
         graft.streaming.FunnelStream.userSessions(ds, 30, "1 hour").toDF(),
-        "append", "sess_" + Relational.sfTag(dir))
+        "append", "sess_" + sfTag(dir))
       val w = Window.partitionBy("user_id").orderBy("session_start")
       sessions.filter(col("user_id") >= 0)
         .select(col("user_id"),
@@ -1179,8 +1122,7 @@ object Insights {
     "stream_late_data" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      GraftSession.tune(s)
-      val ev = Relational.events(s, dir)
+      val ev = events(s, dir)
         .select(col("user_id"), col("ts"), col("event_type"))
       val meta = ev.agg(max(unix_micros(col("ts"))), count(lit(1)),
         sum(col("user_id"))).collect()(0)
@@ -1189,7 +1131,7 @@ object Insights {
         java.lang.Long.toHexString(maxUs) + "_" +
         java.lang.Long.toHexString(meta.getLong(2))
       val scratch = replayFixture(
-          "graft_stream_late_" + Relational.sfTag(dir), fp) { tmp =>
+          "graft_stream_late_" + sfTag(dir), fp) { tmp =>
         val tp = tmp.getAbsolutePath
         def dataFiles: Set[java.io.File] =
           Option(tmp.listFiles).map(_.toSet).getOrElse(Set.empty)
@@ -1224,7 +1166,7 @@ object Insights {
         src.withWatermark("ts", "1 day")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(count(lit(1)).as("cnt")),
-        "append", "late_" + Relational.sfTag(dir))
+        "append", "late_" + sfTag(dir))
       // a finalized SENTINEL window (year-away) is fixture scaffolding,
       // not data — the readout keeps only real-horizon days
       settled
@@ -1247,7 +1189,7 @@ object Insights {
     "corrupt_records" -> ((s, dir) => {
       GraftSession.tune(s)
       val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_corrupt_" + Relational.sfTag(dir)).getAbsolutePath
+        "graft_corrupt_" + sfTag(dir)).getAbsolutePath
       val n = 10000
       if (!new java.io.File(p).exists) {
         val tmp = new java.io.File(p + ".tmp")
@@ -1286,7 +1228,7 @@ object Insights {
     // returns ONE row (count 0, sum/avg/min NULL), a GROUPED aggregate
     // returns ZERO rows (witnessed by a count over it).
     "empty_relations" -> ((s, dir) => {
-      val e = Relational.events(s, dir).filter(col("event_type") === "nope")
+      val e = events(s, dir).filter(col("event_type") === "nope")
       val global = e.agg(
         count(lit(1)).as("n"),
         sum("value").as("s"),
@@ -1312,8 +1254,8 @@ object Insights {
     "federated_union" -> ((s, dir) => {
       GraftSession.tune(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_fed_" + Relational.sfTag(dir)).getAbsolutePath
-      val canon = Relational.events(s, dir)
+        "graft_fed_" + sfTag(dir)).getAbsolutePath
+      val canon = events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           bround(col("value") * lit(1000000.0)).cast("long").as("vm"))
       def ensure(sub: String)(write: String => Unit): String = {
@@ -1359,7 +1301,7 @@ object Insights {
         .as[graft.streaming.FunnelStream.UserEvent]
       parquetSinkReadback(s,
           graft.streaming.FunnelStream.userFunnelState(ds).toDF(),
-          "update", "ufun_" + Relational.sfTag(dir),
+          "update", "ufun_" + sfTag(dir),
           lastWinsKey = Seq("user_id"))
         .groupBy("events", "purchases", "converted")
         .agg(count(lit(1)).as("n_users"))
@@ -1383,7 +1325,7 @@ object Insights {
     "stream_state_read" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val ckpt = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ss_read_" + Relational.sfTag(dir) + "_" +
+        "graft_ss_read_" + sfTag(dir) + "_" +
           java.util.UUID.randomUUID.toString.replace("-", "").take(12))
         .getAbsolutePath
       val counts = streamEvents(s, dir)
@@ -1406,7 +1348,7 @@ object Insights {
           .start()
         q.awaitTermination()
         graft.ops.PlanShape.streamShapes.record(
-          "ssread_" + Relational.sfTag(dir), q)
+          "ssread_" + sfTag(dir), q)
         s.read.format("statestore").load(ckpt)
           .select(col("key.event_type").as("event_type"),
             col("value.count").as("cnt"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.io.Tables.{load => t, rowCount, scratch, sfTag}
 import graft.llm.{CorpusReport, Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** Driver-contract registration for the LLM-data-pipeline operators
@@ -23,45 +24,6 @@ import graft.llm.{CorpusReport, Dedup, Multimodal, Similarity, TextAnalysis}
   */
 object LlmQueries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/documents.parquet")
-  }
-
-  private def emb(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/embeddings.parquet")
-  }
-
-  /** Row count of a parquet table from file FOOTERS (summed block row
-    * counts), no Spark job — the `nRows` feed for the adaptive-banding
-    * builders ([[Similarity.signLshNearDupPairs]]/`semDedupDroppedAuto`/
-    * `cosineNearDupGated`), whose `emb.count()` default otherwise runs
-    * two extra jobs per invocation at index-build time (count + its
-    * partial-agg stage). Exactly what a table catalog supplies at
-    * 100 TB; cached per path because plan-shape snapshots and Verify
-    * both rebuild the same query repeatedly. Footer reads are O(files)
-    * driver-side metadata fetches, the same class of work as listing
-    * the directory.
-    */
-  private val footerCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def parquetRowCount(s: SparkSession, path: String): Long =
-    footerCounts.computeIfAbsent(path, { p: String =>
-      val conf = s.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(p)
-      val fs = root.getFileSystem(conf)
-      val files = fs.listStatus(root).filter(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet"))
-      require(files.nonEmpty, s"no parquet files under $p")
-      files.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-    })
-
   // fanout (adaptive multi-core spread of an unsplittable local scan —
   // see GraftSession.fanout) is applied PER QUERY, not in the loaders:
   // the extra exchange costs ~0.3-0.5 s, which only the explode/
@@ -70,19 +32,21 @@ object LlmQueries {
   // ann_pq_adc 2.8→2.3; but light scans regressed ~2x fleet-wide when
   // it was blanket-applied, 140 s → 186 s suite total)
   private def docsFan(s: SparkSession, dir: String): DataFrame =
-    GraftSession.fanout(docs(s, dir))
+    GraftSession.fanout(t(s, dir, "documents"))
 
   private def embFan(s: SparkSession, dir: String): DataFrame =
-    GraftSession.fanout(emb(s, dir))
+    GraftSession.fanout(t(s, dir, "embeddings"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
-    "dedup_exact_window" -> ((s, dir) => Dedup.exactWindow(docs(s, dir))),
-    "dedup_minhash" -> ((s, dir) => Dedup.minhashBandedPairs(docs(s, dir))),
+    "dedup_exact" -> ((s, dir) => Dedup.exact(t(s, dir, "documents"))),
+    "dedup_exact_window" -> ((s, dir) =>
+      Dedup.exactWindow(t(s, dir, "documents"))),
+    "dedup_minhash" -> ((s, dir) =>
+      Dedup.minhashBandedPairs(t(s, dir, "documents"))),
     // pair list -> connected components -> per-doc cluster label; the
     // step that decides WHICH near-dups to drop
     "dedup_cluster" -> ((s, dir) =>
-      Dedup.dupClusters(Dedup.minhashBandedPairs(docs(s, dir)))),
+      Dedup.dupClusters(Dedup.minhashBandedPairs(t(s, dir, "documents")))),
     // Confident-learning-style label-noise detection by near-dup
     // consensus: within each minhash cluster, the majority `lang` is
     // the consensus label and members disagreeing with it are suspects
@@ -94,9 +58,10 @@ object LlmQueries {
     // 100 TB cost stays in the banded-LSH pair join it reuses.
     "label_noise_detect" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val cl = Dedup.dupClusters(Dedup.minhashBandedPairs(docs(s, dir)))
+      val cl = Dedup.dupClusters(
+          Dedup.minhashBandedPairs(t(s, dir, "documents")))
         .select(col("doc_id"), col("cluster_id"))
-      val j = cl.join(docs(s, dir).select(col("doc_id"), col("lang")),
+      val j = cl.join(t(s, dir, "documents").select(col("doc_id"), col("lang")),
         Seq("doc_id"))
       val votes = j.groupBy("cluster_id", "lang")
         .agg(count(lit(1)).as("v"))
@@ -122,7 +87,7 @@ object LlmQueries {
     // Estimates are exact binary (k/16); only the final readouts are
     // IEEE, mirrored.
     "near_dup_eval" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = t(s, dir, "documents")
       val grams = d.select(col("doc_id"),
         array_distinct(Dedup.shingles(col("text"))).as("g"))
       val j = Dedup.minhashBandedPairs(d, maxDistance = 1.0)
@@ -157,7 +122,7 @@ object LlmQueries {
     // committing a corpus-scale dedup pass.
     "dedup_threshold_sweep" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val d = docs(s, dir)
+      val d = t(s, dir, "documents")
       val grams = d.select(col("doc_id"),
         array_distinct(Dedup.shingles(col("text"))).as("g"))
       val j = Dedup.minhashBandedPairs(d, maxDistance = 1.0)
@@ -194,9 +159,9 @@ object LlmQueries {
       // NULL text → null fingerprint: the typed Aggregator would NPE in
       // hashPair where the oracle silently drops NULL md5s — drop them
       // symmetrically on both the build and probe sides
-      val bl = docs(s, dir).filter(pmod(col("doc_id"), lit(2)) === 1)
+      val bl = t(s, dir, "documents").filter(pmod(col("doc_id"), lit(2)) === 1)
         .filter(col("text").isNotNull).select(fpCol.as("f"))
-      val pr = docs(s, dir).filter(pmod(col("doc_id"), lit(2)) === 0)
+      val pr = t(s, dir, "documents").filter(pmod(col("doc_id"), lit(2)) === 0)
         .filter(col("text").isNotNull)
         .select(col("doc_id"), fpCol.as("f"))
       val bloomAgg = udaf(new graft.functions.BloomFilterAgg(nBits, k),
@@ -235,9 +200,9 @@ object LlmQueries {
     "bloom_autosize_fpr" -> ((s, dir) => {
       import org.apache.spark.sql.Encoders
       val fpCol = TextAnalysis.fingerprint(col("text"))
-      val bl = docs(s, dir).filter(pmod(col("doc_id"), lit(2)) === 1)
+      val bl = t(s, dir, "documents").filter(pmod(col("doc_id"), lit(2)) === 1)
         .filter(col("text").isNotNull).select(fpCol.as("f"))
-      val pr = docs(s, dir).filter(pmod(col("doc_id"), lit(2)) === 0)
+      val pr = t(s, dir, "documents").filter(pmod(col("doc_id"), lit(2)) === 0)
         .filter(col("text").isNotNull)
         .select(col("doc_id"), fpCol.as("f"))
       val hll = udaf(new graft.functions.HyperLogLogAgg(), Encoders.STRING)
@@ -273,37 +238,41 @@ object LlmQueries {
             bround(col("n_fp").cast("double") /
               (col("n_probes") - col("n_in_set")), 6)).as("fpr"))
     }),
-    "dedup_simhash" -> ((s, dir) => Dedup.simhashPairs(docs(s, dir))),
-    "ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(docs(s, dir))),
+    "dedup_simhash" -> ((s, dir) => Dedup.simhashPairs(t(s, dir, "documents"))),
+    "ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(t(s, dir, "documents"))),
     "lang_id" -> ((s, dir) =>
-      TextAnalysis.langId(docs(s, dir)).orderBy("doc_id")),
+      TextAnalysis.langId(t(s, dir, "documents")).orderBy("doc_id")),
     // RAKE multi-word keyphrases (see [[TextAnalysis.rakeKeywords]])
     "keyword_rake" -> ((s, dir) =>
       TextAnalysis.rakeKeywords(docsFan(s, dir))),
     "quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(docs(s, dir)).orderBy("doc_id")),
+      TextAnalysis.qualityScore(t(s, dir, "documents")).orderBy("doc_id")),
     "repetition_filter" -> ((s, dir) =>
       TextAnalysis.repetitionStats(docsFan(s, dir)).orderBy("doc_id")),
     "text_stats" -> ((s, dir) =>
-      TextAnalysis.stats(docs(s, dir)).orderBy("lang")),
+      TextAnalysis.stats(t(s, dir, "documents")).orderBy("lang")),
     "doc_fingerprint" -> ((s, dir) =>
-      docs(s, dir)
+      t(s, dir, "documents")
         .select(col("doc_id"),
           TextAnalysis.fingerprint(col("text")).as("fp"))
         .orderBy("doc_id")),
-    "cosine_topk" -> ((s, dir) => Similarity.cosineTopK(emb(s, dir))),
+    "cosine_topk" -> ((s, dir) =>
+      Similarity.cosineTopK(t(s, dir, "embeddings"))),
     // greedy k-center coreset (diversity selection; see
     // [[Similarity.kcenterSelect]])
-    "kcenter_select" -> ((s, dir) => Similarity.kcenterSelect(emb(s, dir))),
+    "kcenter_select" -> ((s, dir) =>
+      Similarity.kcenterSelect(t(s, dir, "embeddings"))),
     // closest impostors per seed (contrastive hard negatives)
-    "hard_negatives" -> ((s, dir) => Similarity.hardNegatives(emb(s, dir))),
-    "retrieval_eval" -> ((s, dir) => Similarity.retrievalEval(emb(s, dir))),
+    "hard_negatives" -> ((s, dir) =>
+      Similarity.hardNegatives(t(s, dir, "embeddings"))),
+    "retrieval_eval" -> ((s, dir) =>
+      Similarity.retrievalEval(t(s, dir, "embeddings"))),
     // tokenizer fertility per language — the "how many BPE pieces per
     // word does this language cost" readout that drives tokenizer
     // vocab decisions; pure aggregation over the two shared token
     // counters
     "tokenizer_fertility" -> ((s, dir) =>
-      docs(s, dir).groupBy("lang").agg(
+      t(s, dir, "documents").groupBy("lang").agg(
           count(lit(1)).as("n_docs"),
           sum(TextAnalysis.tokenCount(col("text")).cast("long"))
             .as("ws_tokens"),
@@ -324,7 +293,7 @@ object LlmQueries {
     // oracle discipline as cosine_topk, but the fast path is earned by
     // the rule, not by calling array_dot explicitly
     "sql_dot_topk" -> ((s, dir) => {
-      val e = emb(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0)
         .select(expr("transform(embedding, x -> cast(x as double))")
           .as("qvec"))
@@ -340,17 +309,19 @@ object LlmQueries {
     }),
     // one Lloyd iteration from the deterministic flat seeds — the
     // oracle-checkable K-means training step
-    "kmeans_step" -> ((s, dir) => Similarity.kmeansStep(emb(s, dir))),
+    "kmeans_step" -> ((s, dir) =>
+      Similarity.kmeansStep(t(s, dir, "embeddings"))),
     // grid-cell DBSCAN: density clusters + noise over the first two
     // embedding dims — see [[Similarity.dbscanGrid]]
-    "dbscan_grid" -> ((s, dir) => Similarity.dbscanGrid(emb(s, dir))),
+    "dbscan_grid" -> ((s, dir) =>
+      Similarity.dbscanGrid(t(s, dir, "embeddings"))),
     "embedding_centroids" -> ((s, dir) =>
-      Similarity.labelCentroids(emb(s, dir))),
+      Similarity.labelCentroids(t(s, dir, "embeddings"))),
     // seeded MLlib euclidean LSH under the recall gate: emits the exact
     // euclidean top-10 (the oracle) only when the LSH probe recovers
     // ≥ 7 of them (measured: 9–10 across sf0.001/0.01/0.1)
     "ann_lsh" -> ((s, dir) =>
-      Similarity.annTopKGated(emb(s, dir), k = 10,
+      Similarity.annTopKGated(t(s, dir, "embeddings"), k = 10,
         bucketLength = 1.0, numHashTables = 4, maxDistance = 1.5,
         minRecall = 0.7)),
     // KMeans-quantizer IVF under the recall gate against the exact
@@ -359,19 +330,20 @@ object LlmQueries {
     // every sf while a quantizer/assignment regression (recall →
     // ~nprobe/nlist at random) still trips it.
     "ann_ivf" -> ((s, dir) =>
-      Similarity.ivfTopKGated(emb(s, dir), k = 10, nlist = 16, nprobe = 8,
-        minRecall = 0.6)),
+      Similarity.ivfTopKGated(t(s, dir, "embeddings"), k = 10, nlist = 16,
+        nprobe = 8, minRecall = 0.6)),
     // the persisted cell=-partitioned IVF index: write, probe with
     // partition pruning, gate against the exact cosine top-10 — the
     // 100 TB ANN layout under the driver's hard oracle
     "ann_ivf_probe" -> ((s, dir) =>
-      Similarity.ivfProbeGated(emb(s, dir),
-        s"/root/repo/target/ivf_index_${Relational.sfTag(dir)}",
+      Similarity.ivfProbeGated(t(s, dir, "embeddings"),
+        scratch(s"ivf_index_${sfTag(dir)}"),
         k = 10, nlist = 16, nprobe = 8, minRecall = 0.6)),
     // the oracle-checkable IVF: deterministic sampled coarse quantizer,
     // so DuckDB can rebuild the whole index (seeds, assignment, probe)
     "ann_ivf_flat" -> ((s, dir) =>
-      Similarity.ivfFlatTopK(emb(s, dir), k = 10, nlist = 16, nprobe = 4)),
+      Similarity.ivfFlatTopK(t(s, dir, "embeddings"), k = 10, nlist = 16,
+        nprobe = 4)),
     // full-corpus near-dup pair scan under the recall gate: emits the
     // exact ≥-0.4 pair set over a deterministic 1024-vector
     // hash-sample, only when the full-corpus pair scan recovers ≥ 80%
@@ -383,9 +355,9 @@ object LlmQueries {
     "cosine_neardup" -> ((s, dir) =>
       Similarity.cosineNearDupGated(embFan(s, dir),
         minCosine = 0.4, minRecall = 0.8,
-        nRows = Some(parquetRowCount(s, s"$dir/embeddings.parquet")))),
+        nRows = Some(rowCount(s, dir, "embeddings")))),
     "multimodal_features" -> ((s, dir) =>
-      Multimodal.features(s, docs(s, dir))),
+      Multimodal.features(s, t(s, dir, "documents"))),
     // keyframe-sample + 2:1-resize stub over the video modality: the
     // variable-output partition loop (flatMap, codec shape) under the
     // hard oracle — boundaries, resized lengths, and digests all
@@ -393,26 +365,27 @@ object LlmQueries {
     // audio-style frame/hop overlapped chunking (the third multimodal
     // verb); per-doc rollup keeps the gate bounded
     "multimodal_audio" -> ((s, dir) =>
-      Multimodal.audio(s, docs(s, dir))),
+      Multimodal.audio(s, t(s, dir, "documents"))),
     "multimodal_frames" -> ((s, dir) =>
-      Multimodal.frames(s, docs(s, dir))),
+      Multimodal.frames(s, t(s, dir, "documents"))),
     // the fourth multimodal verb: per-modality payload dedup audit
     "multimodal_dedup" -> ((s, dir) =>
-      Multimodal.dedupAudit(docs(s, dir))),
+      Multimodal.dedupAudit(t(s, dir, "documents"))),
     "token_count_bpe" -> ((s, dir) =>
-      docs(s, dir).select(
+      t(s, dir, "documents").select(
         col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("ws_tokens"),
         TextAnalysis.bpeTokenCount(col("text")).as("bpe_tokens"))
         .orderBy("doc_id")),
     "neardup_signlsh" -> ((s, dir) =>
-      Similarity.signLshNearDupPairs(emb(s, dir), minCosine = 0.4,
-        nRows = Some(parquetRowCount(s, s"$dir/embeddings.parquet")))),
-    "ann_sign" -> ((s, dir) => Similarity.annSignTopK(emb(s, dir), k = 10)),
+      Similarity.signLshNearDupPairs(t(s, dir, "embeddings"), minCosine = 0.4,
+        nRows = Some(rowCount(s, dir, "embeddings")))),
+    "ann_sign" -> ((s, dir) =>
+      Similarity.annSignTopK(t(s, dir, "embeddings"), k = 10)),
     // decontaminate the even-id half of the corpus against the odd-id
     // half as a stand-in blocklist (exact dups planted across both)
     "decontaminate" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = t(s, dir, "documents")
       Dedup.decontaminate(
         d.filter(pmod(col("doc_id"), lit(2)) === 0),
         d.filter(pmod(col("doc_id"), lit(2)) === 1))
@@ -423,7 +396,7 @@ object LlmQueries {
     // 100 TB path; no false negatives, so it must equal the exact
     // anti-join row for row (the oracle is the same SQL)
     "decontaminate_bloom" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = t(s, dir, "documents")
       Dedup.decontaminateBloom(
         d.filter(pmod(col("doc_id"), lit(2)) === 0),
         d.filter(pmod(col("doc_id"), lit(2)) === 1))
@@ -438,7 +411,7 @@ object LlmQueries {
     // when the filter needs few shards — same result row for row (same
     // oracle)
     "decontaminate_bloom_sharded" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = t(s, dir, "documents")
       // blockCount feeds SHARD SIZING only (bits/shard, shard count) —
       // correctness never depends on it, so the parquet-footer total
       // halved (the blocklist is the odd-doc_id half; ids are dense, so
@@ -451,13 +424,14 @@ object LlmQueries {
         d.filter(pmod(col("doc_id"), lit(2)) === 0),
         d.filter(pmod(col("doc_id"), lit(2)) === 1),
         blockCount =
-          Some(parquetRowCount(s, s"$dir/documents.parquet") / 2))
+          Some(rowCount(s, dir, "documents") / 2))
         .select("doc_id", "lang", "n_chars")
         .orderBy("doc_id")
     }),
     "split_assign" -> ((s, dir) =>
-      docs(s, dir)
-        .groupBy(Dedup.assignSplit(docs(s, dir), "doc_id").as("split"), col("lang"))
+      t(s, dir, "documents")
+        .groupBy(Dedup.assignSplit(t(s, dir, "documents"), "doc_id")
+          .as("split"), col("lang"))
         .agg(count(lit(1)).as("cnt"))
         .orderBy("split", "lang")),
     // END-TO-END curation pipeline — the composition a real corpus
@@ -475,7 +449,7 @@ object LlmQueries {
     // crosses the wire exactly once.
     "curation_pipeline" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val d = docs(s, dir)
+      val d = t(s, dir, "documents")
       val heldOut = d.filter(pmod(col("doc_id"), lit(10)) === 7)
       val corpus = d.filter(pmod(col("doc_id"), lit(10)) =!= 7)
       val deduped = corpus
@@ -504,7 +478,7 @@ object LlmQueries {
         val b = Dedup.hashBucket1000(c, salt = "")
         when(b < 800, "train").when(b < 900, "val").otherwise("test")
       }
-      Dedup.minhashBandedPairs(docs(s, dir))
+      Dedup.minhashBandedPairs(t(s, dir, "documents"))
         .select(sp(col("doc_a")).as("sa"), sp(col("doc_b")).as("sb"))
         .groupBy(least(col("sa"), col("sb")).as("split_a"),
           greatest(col("sa"), col("sb")).as("split_b"))
@@ -517,7 +491,7 @@ object LlmQueries {
     // min id" would discard the best copy
     "dedup_keep_best" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val d = docs(s, dir)
+      val d = t(s, dir, "documents")
       val cl = Dedup.dupClusters(Dedup.minhashBandedPairs(d))
       val w = Window.partitionBy("cluster_id")
         .orderBy(col("n_chars").desc, col("doc_id").asc)
@@ -539,7 +513,7 @@ object LlmQueries {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("lang").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      docs(s, dir)
+      t(s, dir, "documents")
         .select(col("lang"), col("doc_id"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("ntok"))
         .withColumn("shard",
@@ -549,30 +523,31 @@ object LlmQueries {
         .orderBy("lang", "shard")
     }),
     "sample_per_group" -> ((s, dir) =>
-      Dedup.samplePerGroup(docs(s, dir), "lang", "doc_id", 3)
+      Dedup.samplePerGroup(t(s, dir, "documents"), "lang", "doc_id", 3)
         .select("lang", "doc_id", "rn")
         .orderBy("lang", "rn")),
     "length_quantiles" -> ((s, dir) =>
-      docs(s, dir).groupBy("lang").agg(
+      t(s, dir, "documents").groupBy("lang").agg(
         expr("percentile(n_chars, 0.25)").as("p25"),
         expr("percentile(n_chars, 0.5)").as("p50"),
         expr("percentile(n_chars, 0.75)").as("p75"),
         max("n_chars").as("max_chars"))
         .orderBy("lang")),
     "pii_scrub" -> ((s, dir) =>
-      docs(s, dir).select(
+      t(s, dir, "documents").select(
         col("doc_id"),
         TextAnalysis.piiCount(col("text")).as("pii_spans"),
         length(TextAnalysis.redactPii(col("text"))).as("redacted_len"),
         length(col("text")).as("orig_len"))
         .orderBy("doc_id")),
-    "corpus_report" -> ((s, dir) => CorpusReport.report(docs(s, dir))),
+    "corpus_report" -> ((s, dir) =>
+      CorpusReport.report(t(s, dir, "documents"))),
     "tfidf_top_terms" -> ((s, dir) =>
-      TextAnalysis.tfidfTopTerms(docs(s, dir), k = 10)),
+      TextAnalysis.tfidfTopTerms(t(s, dir, "documents"), k = 10)),
     // downsample low-quality sources to a target mix; report the
     // per-source survivor counts
     "mixture_sample" -> ((s, dir) =>
-      Dedup.sampleByMixture(docs(s, dir), "doc_id", mixtureRates)
+      Dedup.sampleByMixture(t(s, dir, "documents"), "doc_id", mixtureRates)
         .groupBy("source").agg(count(lit(1)).as("kept"))
         .orderBy("source")),
     // edit-distance verification of LSH candidates: the exact (O(n·m)
@@ -581,7 +556,7 @@ object LlmQueries {
     // takes at scale. levenshtein() is codegen'd and per-row; the
     // candidate join bounds the quadratic work.
     "fuzzy_match" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       Dedup.minhashBandedPairs(d)
         .select("doc_a", "doc_b")
         .join(d.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
@@ -597,7 +572,7 @@ object LlmQueries {
     // value-for-value against DuckDB's independent implementation, on
     // real pairs at every scale factor. 6-dp round on both sides.
     "jaro_winkler" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val jw = (a: Column, b: Column) =>
         org.apache.spark.sql.graftbridge.GraftBridge.column(
           graft.functions.JaroWinkler(
@@ -629,7 +604,7 @@ object LlmQueries {
           graft.functions.JaroWinkler(
             org.apache.spark.sql.graftbridge.GraftBridge.expression(a),
             org.apache.spark.sql.graftbridge.GraftBridge.expression(b)))
-      val p = docs(s, dir).select(
+      val p = t(s, dir, "documents").select(
         col("doc_id").as("k"),
         substring(col("text"), 1, 80).as("nm"),
         split(col("text"), " ").getItem(0).as("blk"))
@@ -721,7 +696,7 @@ object LlmQueries {
         val pm = math.pow(9.0, k); val pu = math.pow(9.0, 4 - k)
         math.round(1000000.0 * pm / (pm + pu))
       } // = 152, 12195, 500000, 987805
-      val p = docs(s, dir).select(col("doc_id").as("k"),
+      val p = t(s, dir, "documents").select(col("doc_id").as("k"),
         substring(col("text"), 1, 80).as("nm"),
         split(col("text"), " ").getItem(0).as("blk"),
         col("lang"), col("source"))
@@ -782,7 +757,7 @@ object LlmQueries {
     "array_functions" -> ((s, dir) => {
       val toks = TextAnalysis.tokens(col("text"))
       val lens = transform(toks, t => length(t).cast("long"))
-      docs(s, dir).select(
+      t(s, dir, "documents").select(
         col("doc_id"),
         size(toks).cast("long").as("n_tok"),
         aggregate(lens, lit(0L), (a, x) => a + x).as("tok_chars"),
@@ -796,12 +771,12 @@ object LlmQueries {
     // scales with the corpus ([[Similarity.semDedupCells]]; k=16 at
     // gate SFs), mirrored by the oracle's CASE over count(*).
     "semdedup" -> ((s, dir) =>
-      Similarity.semDedupDroppedAuto(emb(s, dir), minCosine = 0.35,
-        nRows = Some(parquetRowCount(s, s"$dir/embeddings.parquet")))),
+      Similarity.semDedupDroppedAuto(t(s, dir, "embeddings"), minCosine = 0.35,
+        nRows = Some(rowCount(s, dir, "embeddings")))),
     // embedding-space decontamination against an md5-sampled held-out
     // set (stand-in for the eval suite): emits the contaminated ids
     "decontaminate_embed" -> ((s, dir) =>
-      Similarity.decontaminateByEmbedding(emb(s, dir), nHeld = 20,
+      Similarity.decontaminateByEmbedding(t(s, dir, "embeddings"), nHeld = 20,
         minCosine = 0.35)),
     // product-quantization ANN: ADC shortlist over a deterministic
     // sampled codebook + exact re-rank — the WHOLE index (codes,
@@ -813,10 +788,11 @@ object LlmQueries {
         dim = 64, rerank = 100)),
     // concat-and-chunk sequence packing: per-shard bins/straddle card
     "pack_chunks" -> ((s, dir) =>
-      TextAnalysis.packingStats(docs(s, dir), capacity = 256, nShards = 8)),
+      TextAnalysis.packingStats(t(s, dir, "documents"), capacity = 256,
+        nShards = 8)),
     // unigram-surprisal quality score (the relational perplexity filter)
     "unigram_logprob" -> ((s, dir) =>
-      TextAnalysis.unigramSurprisal(docs(s, dir)))
+      TextAnalysis.unigramSurprisal(t(s, dir, "documents")))
   )
 
   /** Rates for the registered mixture query — shared with the oracle. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Tables.{events, load => t, scratch, sfTag}
 
 /** Relational operator queries for the driver's DuckDB-oracle gate: each
   * entry exercises one operator family from SURVEY §2 over the harness's
@@ -26,53 +27,7 @@ import graft.GraftSession
   */
 object Relational {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
-
-  /** events with `ts` normalized to one canonical TIMESTAMP type,
-    * branching on the schema the parquet footer actually declares:
-    *  - TIMESTAMP(NANOS) arrives as raw Long nanos under the session's
-    *    `nanosAsLong` (see [[GraftSession.tune]]) — integer `div` keeps
-    *    full precision (double division would lose bits above 2^53);
-    *  - TIMESTAMP(MICROS) without isAdjustedToUTC arrives as
-    *    TIMESTAMP_NTZ — under the UTC session, casting to TIMESTAMP
-    *    reinterprets the same wall clock as the same instant DuckDB
-    *    reads, so oracle epoch semantics are unchanged.
-    * Branching on the observed type (not a fixed assumption) keeps every
-    * downstream reader working when the data's physical precision moves.
-    */
-  private[graft] def events(s: SparkSession, dir: String): DataFrame = {
-    val df = t(s, dir, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => df
-    }
-  }
-
   private def money(c: String) = col(c).cast(DecimalType(18, 2))
-
-  /** Per-JVM scratch token (pid@host, sanitized): two concurrent runs
-    * at the SAME sf must not share scratch paths or temp table names
-    * either (round-7 advice) — the token is stable within a JVM (a
-    * query re-run overwrites its own scratch) and unique across JVMs,
-    * so Verify and Bench can overlap freely at any sf combination.
-    */
-  private val runToken: String =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "_")
-
-  /** Identifier-safe tag of an sf dir + the per-JVM run token, for
-    * per-scale scratch paths and table names.
-    */
-  private[queries] def sfTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "") +
-      "_" + runToken
 
   private val queriesBase: Map[String, (SparkSession, String) => DataFrame] = Map(
     // GROUP BY + COUNT (SURVEY §2.4; report_engine.py:179-183)
@@ -1221,7 +1176,7 @@ object Relational {
       // Bench (sf0.1) overlapping in time must not clobber each other's
       // tables mid-query
       val tag = sfTag(dir)
-      val base = s"/root/repo/target/bucketed_$tag"
+      val base = scratch(s"bucketed_$tag")
       graft.ops.Bucketing.writeBucketed(
         t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
         s"graft_orders_b_$tag", s"$base/orders_b", "o_custkey", 8)
@@ -1244,7 +1199,7 @@ object Relational {
     // mangles (escaping, unicode, nulls) breaks the hash.
     "jsonl_roundtrip" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      val path = s"/root/repo/target/roundtrip/documents_jsonl_${sfTag(dir)}"
+      val path = scratch(s"roundtrip/documents_jsonl_${sfTag(dir)}")
       d.write.mode("overwrite").json(path)
       s.read.schema(d.schema).json(path).agg(
         count(lit(1)).as("n"),
@@ -1257,7 +1212,7 @@ object Relational {
     // same round-trip through the columnar ORC source/sink
     "orc_roundtrip" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      val path = s"/root/repo/target/roundtrip/documents_orc_${sfTag(dir)}"
+      val path = scratch(s"roundtrip/documents_orc_${sfTag(dir)}")
       d.write.mode("overwrite").orc(path)
       s.read.schema(d.schema).orc(path).agg(
         count(lit(1)).as("n"),
@@ -1276,7 +1231,7 @@ object Relational {
     // text_len on whitespace-padded docs)
     "xml_roundtrip" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      val path = s"/root/repo/target/roundtrip/documents_xml_${sfTag(dir)}"
+      val path = scratch(s"roundtrip/documents_xml_${sfTag(dir)}")
       d.write.mode("overwrite").format("xml")
         .option("rowTag", "doc").save(path)
       s.read.schema(d.schema).format("xml")

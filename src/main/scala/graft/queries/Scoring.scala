@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Tables.{events, load => t, scratch, sfTag}
 import graft.llm.{Dedup, Ranking, Similarity, TextAnalysis}
 
 /** Round-8 batch: corpus ranking and scoring (BM25, PMI collocations,
@@ -18,11 +19,6 @@ import graft.llm.{Dedup, Ranking, Similarity, TextAnalysis}
   * fixed IEEE chains mirrored verbatim in the oracle, total ORDER BY.
   */
 object Scoring {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Query terms for the registered BM25 ranking and the inverted-index
     * probe — shared with the oracles so the two sides can't drift. Both
@@ -73,7 +69,7 @@ object Scoring {
     // pruning — the retrieval-index layout under the hard value oracle
     // (the oracle rebuilds df + sorted postings straight from documents)
     "inverted_probe" -> ((s, dir) => {
-      val idx = s"/root/repo/target/inv_index_${Relational.sfTag(dir)}"
+      val idx = scratch(s"inv_index_${sfTag(dir)}")
       TextAnalysis.invertedIndexWrite(t(s, dir, "documents"), idx)
       TextAnalysis.invertedIndexProbe(s, idx, bm25Terms)
     }),
@@ -225,7 +221,7 @@ object Scoring {
     // a USING-column semi-join (self-lineage-safe, unlike a raw
     // Column === Column condition between two frames sharing a parent).
     "rolling_distinct" -> ((s, dir) => {
-      val ud = Relational.events(s, dir)
+      val ud = events(s, dir)
         .select(col("user_id"),
           expr("datediff(to_date(ts), date'2024-01-01')").as("d"))
         .distinct()

@@ -24,7 +24,7 @@ object QueryProfile {
     val unknown = names.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -63,8 +63,13 @@ object QueryProfile {
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
+      // both passes run under the query's conf overlay, the
+      // configuration Bench and Verify run
+      def run(): Unit = SparkEntry.withOverlay(spark, name) {
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      }
       // warm pass (codegen + JIT), untimed
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      try run()
       catch { case e: Throwable =>
         println(s"$name WARM FAILED: ${e.getMessage}") }
       val samples = (1 to passes).map { p =>
@@ -73,7 +78,7 @@ object QueryProfile {
         jobLines.clear()
         record = true
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        run()
         val sec = (System.nanoTime() - t0) / 1e9
         record = false
         Thread.sleep(200) // let listener events drain

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.io.Tables
 import graft.llm.Similarity
 
 /** Throwaway diagnostic: print the recall-gate overlap margins at each
@@ -13,7 +14,7 @@ object RecallProbe {
     val spark = GraftSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val emb = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
+      val emb = Tables.load(spark, s"/root/testdata/$sf", "embeddings")
       def ov(exact: org.apache.spark.sql.DataFrame,
           approx: org.apache.spark.sql.DataFrame,
           keys: Seq[String]): (Long, Long) = {

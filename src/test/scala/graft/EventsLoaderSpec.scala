@@ -1,23 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Relational
+import graft.io.Tables
 
-/** Regression pin for the round-9 outage: `Relational.events` must
-  * normalize `ts` to ONE canonical TIMESTAMP instant regardless of the
-  * physical encoding the harness's parquet happens to carry that round.
+/** Regression pin for the round-9 outage: `Tables.events` (batch) and
+  * `Tables.streamEvents` (streaming) must normalize `ts` to ONE
+  * canonical TIMESTAMP instant regardless of the physical encoding the
+  * harness's parquet happens to carry that round.
   * Three encodings are pinned:
   *   - raw Long epoch-nanos (what TIMESTAMP(NANOS) parquet becomes under
   *     `spark.sql.legacy.parquet.nanosAsLong`);
   *   - TIMESTAMP_NTZ (what TIMESTAMP(MICROS, isAdjustedToUTC=false)
   *     parquet reads as — the current testdata encoding);
   *   - TIMESTAMP (µs, isAdjustedToUTC=true).
-  * All three fixtures encode the SAME instants; the loader must return
+  * All three fixtures encode the SAME instants; both loaders must return
   * TimestampType with identical values for each, under the UTC session.
+  * The fixtures are Spark-written DIRECTORY tables; the harness's
+  * single-FILE layout is streamed from the real sf0.001 data.
   */
 class EventsLoaderSpec extends AnyFunSuite {
 
@@ -38,12 +42,26 @@ class EventsLoaderSpec extends AnyFunSuite {
     dir
   }
 
-  private def load(dir: String): Seq[(Long, Long)] = {
-    val df = Relational.events(spark, dir)
+  private def instants(df: DataFrame): Seq[(Long, Long)] = {
     assert(df.schema("ts").dataType === TimestampType,
       s"loader must canonicalize to TIMESTAMP, got ${df.schema("ts").dataType}")
     df.select(col("event_id"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+  }
+
+  private def load(dir: String): Seq[(Long, Long)] =
+    instants(Tables.events(spark, dir))
+
+  /** The streaming reader drained by an AvailableNow trigger into a
+    * memory table, then compared like the batch reader.
+    */
+  private def stream(dir: String): Seq[(Long, Long)] = {
+    val ev = Tables.streamEvents(spark, dir)
+    assert(ev.isStreaming)
+    val name = "evload_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    ev.writeStream.format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    instants(spark.table(name))
   }
 
   private val expected: Seq[(Long, Long)] =
@@ -71,11 +89,35 @@ class EventsLoaderSpec extends AnyFunSuite {
   test("events loader: real harness data (if present) loads and filters") {
     val sf = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$sf/events.parquet").exists())
-    val df = Relational.events(spark, sf)
+    val df = Tables.events(spark, sf)
     assert(df.schema("ts").dataType === TimestampType)
     // a ts predicate must be usable (this is what died in round 9)
     assert(df.filter(col("ts") >= lit("2020-01-01").cast("timestamp"))
       .limit(1).count() >= 0)
     assert(df.count() > 0)
+  }
+
+  test("stream events loader: raw Long nanos (legacy nanosAsLong path)") {
+    val dir = writeFixture("long")(us => (us * 1000).cast("long"))
+    assert(stream(dir) === expected)
+  }
+
+  test("stream events loader: TIMESTAMP_NTZ micros (current testdata encoding)") {
+    val dir = writeFixture("ntz")(us =>
+      timestamp_micros(us).cast(TimestampNTZType))
+    assert(stream(dir) === expected)
+  }
+
+  test("stream events loader: TIMESTAMP micros (isAdjustedToUTC)") {
+    val dir = writeFixture("tz")(us => timestamp_micros(us))
+    assert(stream(dir) === expected)
+  }
+
+  test("stream events loader: single-file harness table equals the batch read") {
+    val sf = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$sf/events.parquet").isFile)
+    val batch = load(sf)
+    assert(batch.nonEmpty)
+    assert(stream(sf) === batch)
   }
 }
