@@ -123,7 +123,7 @@ object RunReports {
     Sinks.parquet(table, s"$stem.parquet")
     val grid = FunnelRender.grid(table, FunnelTable.summary(wide))
     Sinks.csv(grid, s"$stem.grid.csv")
-    // presentation-sized collect — correct by design for xlsx. The
+    // the grid is a local frame, so this collect runs no Spark job. The
     // reference's excel writer prepends one blank row above the grid
     // (run_reports.py:66-67), making the golden file 25 rows.
     val blank = org.apache.spark.sql.Row.fromSeq(Seq.fill(7)(""))

@@ -23,10 +23,16 @@ import org.apache.spark.sql.functions._
   * (ints bare, floats with a trailing .0 when integral — Spark's
   * double→string cast matches), empty cells are "" (quirk 5: the blank
   * subcause row renders "", never 0).
+  *
+  * [[grid]] runs its 24-row plan once and returns the ordered rows as a
+  * local frame ([[FunnelTable.local]]): the CSV sink writes it and the
+  * xlsx render collects it without running the plan again.
   */
 object FunnelRender {
 
-  /** One ordered 24-row grid; `ord` is the presentation row index. */
+  /** One ordered 24-row grid, as a local frame; `ord` is the presentation
+    * row index.
+    */
   def grid(rows: DataFrame, summary: DataFrame): DataFrame = {
     def s(c: org.apache.spark.sql.Column) = coalesce(c.cast("string"), lit(""))
 
@@ -68,6 +74,8 @@ object FunnelRender {
       s(col("drop_count")).as("c5"),
       s(col("drop_pct")).as("c6"))
 
-    head.unionByName(data).orderBy("ord")
+    // 24 rows: one partition sorted in place, not a range-partition
+    // shuffle with its sampling job
+    FunnelTable.local(head.unionByName(data).coalesce(1).sortWithinPartitions("ord"))
   }
 }

@@ -19,6 +19,11 @@ import org.apache.spark.sql.{DataFrame, Row}
   * SpreadsheetML with pure JDK zip (no external deps ship in this
   * environment); cell styling beyond types is presentation polish the
   * canonical sinks don't carry.
+  *
+  * On the report path the frames arriving here are LOCAL frames: the
+  * typed table is an explode over [[graft.engine.FunnelTable.wide]]'s
+  * computed row and the grid is [[graft.engine.FunnelRender.grid]]'s
+  * collected rows, so no sink re-runs the source scan.
   */
 object Sinks {
 
@@ -266,21 +271,26 @@ object Sinks {
     * completed. Config from env: SMTP_HOST, SMTP_USER, SMTP_PASS
     * (all three required to attempt a send), optional SMTP_PORT
     * (default 587), SMTP_FROM (default user), SMTP_TLS=false to
-    * disable STARTTLS (e.g. a local relay). Never throws — a failed
-    * send logs and returns false, exactly like the reference.
+    * disable STARTTLS (e.g. a local relay); `env` defaults to the
+    * process environment. Never throws — a failed send, a non-numeric
+    * SMTP_PORT included, logs and returns false, exactly like the
+    * reference.
     */
   def emailOrSkip(to: Seq[String], cc: Seq[String], subject: String,
-      attachment: String): Boolean = {
-    val env = sys.env
+      attachment: String, env: Map[String, String] = sys.env): Boolean = {
     (env.get("SMTP_HOST"), env.get("SMTP_USER"), env.get("SMTP_PASS")) match {
       case (Some(host), Some(user), Some(pass)) =>
-        val cfg = Smtp.Config(host,
-          env.get("SMTP_PORT").map(_.toInt).getOrElse(587),
-          user, pass,
-          from = env.getOrElse("SMTP_FROM", user),
-          startTls = !env.get("SMTP_TLS").contains("false"))
-        val body = s"<b>Funnel report</b><br>Attached: $subject"
-        val sent = Smtp.send(cfg, to, cc, subject, body, Seq(attachment))
+        val sent = env.get("SMTP_PORT").fold(Option(587))(_.toIntOption) match {
+          case Some(port) =>
+            val cfg = Smtp.Config(host, port, user, pass,
+              from = env.getOrElse("SMTP_FROM", user),
+              startTls = !env.get("SMTP_TLS").contains("false"))
+            val body = s"<b>Funnel report</b><br>Attached: $subject"
+            Smtp.send(cfg, to, cc, subject, body, Seq(attachment))
+          case None =>
+            println(s"[email] bad SMTP_PORT: ${env("SMTP_PORT")}")
+            false
+        }
         println(s"[email] ${if (sent) "sent" else "send FAILED"}: " +
           s"to=${to.mkString(",")} subject=$subject")
         sent

@@ -1,10 +1,15 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{FunnelAggregates, FunnelTable}
-import graft.io.MockData
+import scala.jdk.CollectionConverters._
+
+import graft.core.DateSpec
+import graft.engine.{FunnelAggregates, FunnelRender, FunnelTable}
+import graft.io.{FunnelCsvFixture, FunnelSources, MockData, Sinks}
 
 /** Golden-value tests: the reference's demo fixture (`report_engine.py:326-367`)
   * through the full funnel pipeline must reproduce the committed golden xlsx
@@ -123,6 +128,61 @@ class FunnelTableSpec extends AnyFunSuite {
     val raw = fromRaw.collect().map(r => r.getInt(0) -> r).toMap
     assert(raw.size === 18)
     (0 until 18).foreach { i => assert(raw(i) === table(i), s"row $i") }
+  }
+
+  /** The report path's table (an explode over [[FunnelTable.wide]]'s local
+    * frame) against the one lazy plan of [[FunnelTable.buildFromRaw]] over
+    * the same raw frames: same schema, nullability included, same rows.
+    */
+  private def assertLocalEqualsPlan(
+      rawStages: DataFrame, rawOtp: DataFrame, rawDiscovery: DataFrame,
+      rawUserFunnel: DataFrame, what: String): Unit = {
+    val viaWide = FunnelTable.rows(FunnelTable.wide(
+      FunnelAggregates.stageTotals(rawStages),
+      FunnelAggregates.otpTotals(rawOtp),
+      FunnelAggregates.discoveryTotals(rawDiscovery),
+      FunnelAggregates.fiStatusCounts(rawUserFunnel)))
+    val plan = FunnelTable.buildFromRaw(rawStages, rawOtp, rawDiscovery, rawUserFunnel)
+    assert(viaWide.schema == plan.schema, s"$what: schema")
+    assert(viaWide.orderBy("row_idx").collect().toSeq ==
+      plan.orderBy("row_idx").collect().toSeq, s"$what: rows")
+  }
+
+  test("local wide frame changes no value or type: MockData") {
+    assertLocalEqualsPlan(MockData.stages(spark), MockData.rawOtp(spark),
+      MockData.rawDiscovery(spark), MockData.rawUserFunnel(spark), "MockData")
+  }
+
+  test("local wide frame changes no value or type: every CSV-fixture entity, Range spec") {
+    val base = Files.createTempDirectory("funnel-local").toString
+    FunnelCsvFixture.write(base, FunnelCsvFixture.defaultDays)
+    val spec = DateSpec.parse("31_01_2026 -> 01_02_2026")
+    FunnelCsvFixture.entities.foreach { e =>
+      assertLocalEqualsPlan(
+        FunnelSources.stages(spark, base, spec, Some(e)),
+        FunnelSources.otp(spark, base, spec, Some(e)),
+        FunnelSources.discovery(spark, base, spec, Some(e)),
+        FunnelSources.userFunnel(spark, base, spec, Some(e)), e)
+    }
+  }
+
+  test("grid holds ord 0..23 in order, and the CSV sink writes them in that order") {
+    val w = FunnelTable.wide(
+      FunnelAggregates.stageTotals(MockData.stages(spark)),
+      MockData.otpTotals(spark),
+      MockData.discoveryTotals(spark),
+      MockData.fiStatusCounts(spark))
+    val grid = FunnelRender.grid(FunnelTable.rows(w), FunnelTable.summary(w))
+    assert(grid.collect().map(_.getInt(0)).toSeq === (0 until 24))
+
+    val out = Files.createTempDirectory("grid-csv").resolve("grid.csv")
+    Sinks.csv(grid, out.toString)
+    val parts = Files.list(out).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.size === 1)
+    val lines = Files.readAllLines(parts.head).asScala.toSeq
+    assert(lines.head.startsWith("ord,"))
+    assert(lines.tail.map(_.takeWhile(_ != ',').toInt) === (0 until 24))
   }
 
   test("subcause success cells are null and flagged is_subcause") {

@@ -261,7 +261,14 @@ class RenderSinksSpec extends AnyFunSuite {
   }
 
   test("email sink skips cleanly without SMTP config") {
-    assert(!Sinks.emailOrSkip(Seq("a@e.com"), Nil, "subject", "/tmp/x.xlsx"))
+    assert(!Sinks.emailOrSkip(Seq("a@e.com"), Nil, "subject", "/tmp/x.xlsx",
+      env = Map.empty))
+  }
+
+  test("email sink: a non-numeric SMTP_PORT returns false without throwing") {
+    val env = Map("SMTP_HOST" -> "localhost", "SMTP_USER" -> "u",
+      "SMTP_PASS" -> "p", "SMTP_PORT" -> "not-a-port")
+    assert(!Sinks.emailOrSkip(Seq("a@e.com"), Nil, "subject", "/tmp/x.xlsx", env))
   }
 
   test("SMTP client: full dialogue against an in-process server, MIME intact") {
